@@ -47,7 +47,11 @@ object KgQueries {
 
   /** A4: most-connected top-k (stats dashboard top-5). */
   def mostConnected(nodes: DataFrame, edges: DataFrame, k: Int = 5): DataFrame =
-    degree(nodes, edges).orderBy(col("degree").desc, col("name").asc).limit(k)
+    mostConnectedOf(degree(nodes, edges), k)
+
+  /** [[mostConnected]] over an already computed [[degree]] table. */
+  def mostConnectedOf(degree: DataFrame, k: Int): DataFrame =
+    degree.orderBy(col("degree").desc, col("name").asc).limit(k)
 
   /** A6: relationship-type histogram. */
   def predHistogram(edges: DataFrame): DataFrame =
@@ -272,12 +276,18 @@ object KgQueries {
     * [[mergedEdges]]. At a 10⁹-edge table this is the only viable shape —
     * the previous implementation rewrote the whole table per added edge. */
   def addEdgeDelta(spark: SparkSession, tableDir: String,
-      srcId: Long, dstId: Long, pred: String): Unit = {
-    val provType = graft.tables.TableIO.readCurrent(spark, tableDir)
-      .schema("provenance").dataType
+      srcId: Long, dstId: Long, pred: String): Unit =
+    addEdgeDelta(spark, tableDir, srcId, dstId, pred,
+      graft.tables.TableIO.readCurrent(spark, tableDir).schema("provenance").dataType)
+
+  /** [[addEdgeDelta]] for a caller that already knows the table's
+    * provenance array type (a session holding the chain's schema), saving
+    * the schema-inference read of the chain. */
+  def addEdgeDelta(spark: SparkSession, tableDir: String,
+      srcId: Long, dstId: Long, pred: String,
+      provType: org.apache.spark.sql.types.DataType): Unit =
     graft.tables.TableIO.commitDelta(
       edgeRow(spark, provType, srcId, dstId, pred), tableDir, "add_edge")
-  }
 
   /** G8: graph snapshot export (nodes + links, id-addressed). */
   def graphSnapshot(nodes: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {

@@ -271,6 +271,27 @@ object TableIO {
     buf.toSeq
   }
 
+  /** Identity of a table's CURRENT state: the snapshot id plus the sorted
+    * `snap-<n>/<file>` names of every parquet data file in its chain. The id
+    * alone is not enough — a table directory replaced out of band by another
+    * table with the same ids (a restored copy) reuses ids but not file
+    * names, since every Spark write stamps a fresh UUID into its part files.
+    * Driver-side listing of ≤ `maxChain` directories; no Spark job. */
+  final case class ChainFingerprint(snapshot: Int, files: Seq[String])
+
+  def chainFingerprint(dir: String): ChainFingerprint = {
+    val cur = currentSnapshotId(dir).getOrElse(
+      throw new IllegalStateException(s"no CURRENT snapshot in $dir"))
+    val files = snapshotChain(dir, cur).flatMap { s =>
+      val snap = f"snap-$s%05d"
+      val st = Files.list(Paths.get(dir, snap))
+      try st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).map(f => s"$snap/$f").toSeq
+      finally st.close()
+    }
+    ChainFingerprint(cur, files.sorted)
+  }
+
   def readCurrent(spark: SparkSession, dir: String): DataFrame =
     readSnapshot(spark, dir, currentSnapshotId(dir).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot in $dir")))

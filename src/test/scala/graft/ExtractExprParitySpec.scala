@@ -139,6 +139,52 @@ class ExtractExprParitySpec extends SparkSuite {
     }
   }
 
+  test("off-heap bytes (base = null): scan, slice and trim == the byte[] path") {
+    // the shape of an OffHeapColumnVector-backed UTF8String: native memory,
+    // null base, absolute address. Word-byte padding on both flanks, as in
+    // the on-heap case, catches a boundary check that peeks outside [0, len)
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    val bac = ByteAhoCorasick(aliases ++ preds)
+    val sc1 = new graft.extract.MatchScratch
+    val sc2 = new graft.extract.MatchScratch
+    val texts = Check.samples(sentence, 200) ++ Seq(
+      "", "Machine Learning uses AI", " , naïve prose supports Ångström Synthesis. ",
+      "中文概念 uses 中文概念. Ångström Synthesis extends Deep Learning Systems")
+    val bytes = texts.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val pad = 7
+    val cap = bytes.map(_.length).max + 2 * pad
+    val addr = Platform.allocateMemory(cap.toLong)
+    def spans(text: UTF8String) = new GenericArrayData(Array[Any](new GenericInternalRow(
+      Array[Any](UTF8String.fromString("text"), text, UTF8String.fromString(""), 0))))
+    def triples(a: org.apache.spark.sql.catalyst.util.ArrayData) =
+      (0 until a.numElements()).map(i => a.getStruct(i, 8).toSeq(
+        graft.extract.ExtractTriplesExpr.outType.elementType
+          .asInstanceOf[org.apache.spark.sql.types.StructType]).map(String.valueOf))
+    var emitted = 0
+    try texts.zip(bytes).foreach { case (t, b) =>
+      Platform.setMemory(addr, 'x'.toByte, cap.toLong)
+      Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET.toLong, null, addr + pad, b.length.toLong)
+      val k1 = bac.leftmostLongestInto(b, b.length, sc1)
+      val k2 = bac.leftmostLongestInto(null, addr + pad, b.length, sc2)
+      assert(k2 == k1, s"count mismatch on '$t'")
+      (0 until k1).foreach { i =>
+        assert(sc2.starts(i) == sc1.starts(i) && sc2.ends(i) == sc1.ends(i) &&
+          sc2.pats(i) == sc1.pats(i), s"hit $i mismatch on '$t'")
+      }
+      // the kernel's trimmed, sliced emission over the same native bytes
+      val onHeap = graft.extract.ExtractTriplesExpr.compute(
+        spans(UTF8String.fromBytes(b)), byteDict.value, bytePred.value)
+      val offHeap = graft.extract.ExtractTriplesExpr.compute(
+        spans(UTF8String.fromAddress(null, addr + pad, b.length)), byteDict.value, bytePred.value)
+      assert(triples(offHeap) == triples(onHeap), s"triples mismatch on '$t'")
+      emitted += offHeap.numElements()
+    } finally Platform.freeMemory(addr)
+    assert(emitted > 0)
+  }
+
   test("null spans array and null span elements yield zero triples, both eval paths") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
